@@ -33,7 +33,7 @@ from stockpulse_spark.functions.indicators import (
 from stockpulse_spark.operators.quality import clean_bars
 from stockpulse_spark.sources.rest_replay import incremental_gate, parse_api_payload
 from stockpulse_spark.sources.sinks import write_bronze, write_silver
-from stockpulse_spark.streaming.pipeline import encode_stream_messages
+from stockpulse_spark.streaming.pipeline import _concurrently, encode_stream_messages
 
 
 def derive_processed(bars: DataFrame) -> DataFrame:
@@ -61,15 +61,31 @@ def ingest_job(
 ) -> DataFrame:
     """REST payloads (symbol, payload json string) → parsed, gated,
     cleaned, derived; bronze + silver written; returns the wire
-    messages the reference would publish (one JSON per bar)."""
+    messages the reference would publish (one JSON per bar).
+
+    The parse → gate → clean → derive plan is evaluated once, pinned
+    with an eager localCheckpoint. Bronze, silver and the returned
+    messages all read the pin, so the JSON parse runs once instead of
+    three times, and the three outputs agree even where the plan is not
+    deterministic: which of two same-key rows `clean_bars` keeps, and
+    `current_timestamp()` in the retention gate. The two table writes
+    run concurrently. If either fails, the pin is released and the
+    error re-raised."""
     bars = parse_api_payload(payloads)
     if last_seen is not None:
         bars = incremental_gate(bars, last_seen, retention_days=retention_days)
     bars = clean_bars(bars, key_cols=["symbol", "timestamp"])
-    write_bronze(bars, bronze_path)
-    processed = derive_processed(bars)
-    write_silver(processed, silver_path)
-    return encode_stream_messages(processed)
+    pinned = derive_processed(bars).localCheckpoint(eager=True)
+    try:
+        _concurrently(
+            lambda: write_bronze(pinned.select(*bars.columns), bronze_path),
+            lambda: write_silver(pinned, silver_path),
+        )
+    except BaseException:
+        # a local checkpoint has no public release; drop its blocks
+        pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        raise
+    return encode_stream_messages(pinned)
 
 
 def analytics_job(

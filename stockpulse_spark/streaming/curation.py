@@ -31,28 +31,37 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from stockpulse_spark.llmdata.dedup import dedup_gate
+from stockpulse_spark.streaming.pipeline import _write_once
 
 
 def curation_gate_writer(corpus: DataFrame, admitted_path: str, rejected_path: str):
     """foreachBatch hook: gate the micro-batch against `corpus`,
     append admitted docs and rejected (verdict-tagged) docs to their
-    sinks."""
+    sinks.
+
+    The verdict-tagged batch is evaluated once (`_write_once`): both
+    appends read it from cache instead of each re-running the MinHash
+    join, so they also cannot disagree on a verdict. The two appends run
+    concurrently; an empty batch writes nothing."""
+
+    def write_admitted(tagged: DataFrame) -> None:
+        tagged.filter(F.col("verdict") == "new").drop("verdict").write.mode(
+            "append"
+        ).parquet(admitted_path)
+
+    def write_rejected(tagged: DataFrame) -> None:
+        tagged.filter(F.col("verdict") != "new").write.mode("append").parquet(
+            rejected_path
+        )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
         verdicts = dedup_gate(
             batch, corpus, batch_id_col="doc_id", corpus_id_col="doc_id"
         ).withColumnRenamed("doc_id", "v_id")
         tagged = batch.join(
             verdicts, batch["doc_id"] == F.col("v_id")
         ).drop("v_id")
-        tagged.filter(F.col("verdict") == "new").drop("verdict").write.mode(
-            "append"
-        ).parquet(admitted_path)
-        tagged.filter(F.col("verdict") != "new").write.mode("append").parquet(
-            rejected_path
-        )
+        _write_once(tagged, write_admitted, write_rejected)
 
     return write_batch
 

@@ -21,6 +21,10 @@ the retention window — the reference needs a full-table rewrite every
 
 from __future__ import annotations
 
+from functools import partial
+from typing import Callable
+
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,6 +33,44 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from stockpulse_spark.schemas import STREAM_MESSAGE
+
+
+def _concurrently(*writes: Callable[[], None]) -> None:
+    """Run `writes` in parallel, the first on the calling thread. The
+    other threads inherit the caller's local properties, so their Spark
+    jobs keep its job group (and, inside foreachBatch, the streaming
+    query's). Waits for all of them, then re-raises the first error."""
+    errors: list[BaseException] = []
+
+    def run(write: Callable[[], None]) -> None:
+        try:
+            write()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            errors.append(e)
+
+    threads = [InheritableThread(target=run, args=(w,)) for w in writes[1:]]
+    for t in threads:
+        t.start()
+    run(writes[0])
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+
+
+def _write_once(df: DataFrame, *writes: Callable[[DataFrame], None]) -> None:
+    """Fan `df` out to several sinks, evaluating it once: persist it,
+    materialize it with one full action, then run `writes` on the cached
+    rows concurrently. An empty `df` writes nothing. The count runs
+    every partition, so a stateful operator upstream commits its state
+    version even when the batch is empty (the no-data batch that ends
+    every `availableNow` run)."""
+    df.persist()
+    try:
+        if df.count():
+            _concurrently(*(partial(w, df) for w in writes))
+    finally:
+        df.unpersist()
 
 
 def encode_stream_messages(df: DataFrame) -> DataFrame:
@@ -93,8 +135,14 @@ def dedup_stream(
     """Exactly-once-per-key semantics (reference T2: three dedup layers
     → one operator). The watermark simultaneously drops late rows
     beyond the retention window (T3, stocks_pipeline.py:146-155) and
-    bounds the dedup state store."""
-    return df.withWatermark(watermark_col, watermark).dropDuplicates(list(keys))
+    bounds the dedup state store.
+
+    Rows with a NULL key or event time are dropped first: a malformed
+    bus line parses to all-NULL columns, and like decode_stream_messages
+    (which nacks messages with no routable symbol) the loader never
+    stores them."""
+    routable = df.dropna(subset=[*keys, watermark_col])
+    return routable.withWatermark(watermark_col, watermark).dropDuplicates(list(keys))
 
 
 def dual_sink_writer(raw_path: str, processed_path: str):
@@ -105,27 +153,35 @@ def dual_sink_writer(raw_path: str, processed_path: str):
     batch — same semantics as the reference, which computes them at the
     producer per fetch (data_preprocessor.py:63-70).
 
+    Each batch is evaluated once (`_write_once`): without the persist,
+    both appends would re-run the source read and the stateful dedup
+    upstream. The two appends run concurrently, and the empty no-data
+    batch that ends every `availableNow` run writes no files.
+
     foreachBatch + checkpoint gives at-least-once into idempotent
     parquet appends; with a MERGE-capable sink (Delta/Iceberg) the same
     hook is exactly-once.
     """
     from pyspark.sql import Window
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
+    def write_raw(batch: DataFrame) -> None:
         raw_cols = ["timestamp", "symbol", "open", "high", "low", "close", "volume"]
         batch.select(*[c for c in raw_cols if c in batch.columns]).write.mode(
             "append"
         ).parquet(raw_path)
 
+    def write_processed(batch: DataFrame) -> None:
         w = Window.partitionBy("symbol", F.to_date("timestamp")).orderBy("timestamp")
-        processed = batch.select(
+        batch.select(
             "*",
             F.avg("close").over(w.rowsBetween(-4, 0)).alias("ma5_batch"),
             F.avg("close")
             .over(w.rowsBetween(Window.unboundedPreceding, 0))
             .alias("cma_batch"),
-        )
-        processed.write.mode("append").parquet(processed_path)
+        ).write.mode("append").parquet(processed_path)
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        _write_once(batch, write_raw, write_processed)
 
     return write_batch
 

@@ -75,3 +75,54 @@ def test_ingest_gate_skips_stale(spark, tmp_path):
     )
     msgs = [json.loads(r["value"]) for r in out.collect()]
     assert len(msgs) == 1 and msgs[0]["timestamp"] == "2024-01-02 09:35:00"
+
+
+def test_ingest_job_evaluates_once(spark, tmp_path):
+    """Two payloads carry the same bar key with different closes:
+    whichever row the dedup keeps, bronze, silver and the returned
+    messages hold the same one, because all three read one pinned
+    evaluation. The returned plan starts from that pin, not from the
+    payload parse, and both concurrent writes keep the caller's job
+    group."""
+    ts = "2024-01-02 09:30:00"
+    payloads = spark.createDataFrame(
+        [("AAPL", _payload({ts: 100.0})), ("AAPL", _payload({ts: 101.0}))],
+        "symbol string, payload string",
+    )
+    bronze, silver = str(tmp_path / "bronze"), str(tmp_path / "silver")
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("ingest-once", "ingest-once")
+    try:
+        out = ingest_job(payloads, None, bronze, silver)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert sc.statusTracker().getJobIdsForGroup("ingest-once")
+
+    closes = [
+        [r.close for r in spark.read.parquet(bronze).collect()],
+        [r.close for r in spark.read.parquet(silver).collect()],
+        [json.loads(r.value)["close"] for r in out.collect()],
+    ]
+    assert len(closes[0]) == 1 and closes[0][0] in (100.0, 101.0)
+    assert closes[1] == closes[0] and closes[2] == closes[0]
+    # JsonToStructs prints as from_json
+    assert "from_json" not in out._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_ingest_job_write_failure(spark, tmp_path):
+    """A sink path that is a regular file fails ingest_job with the
+    write's error, and the pinned evaluation is released."""
+    from py4j.protocol import Py4JJavaError
+
+    payloads = spark.createDataFrame(
+        [("AAPL", _payload({"2024-01-02 09:30:00": 100.0}))],
+        "symbol string, payload string",
+    )
+    blocker = tmp_path / "bronze"
+    blocker.write_text("not a directory")
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(Py4JJavaError, match="not a directory"):
+        ingest_job(payloads, None, str(blocker), str(tmp_path / "silver"))
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persisted

@@ -8,6 +8,7 @@ import json
 import time
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,6 +46,15 @@ def _write_file(src: str, name: str, bars: list[dict]) -> None:
     Path(src, name).write_text("\n".join(json.dumps(b) for b in bars))
 
 
+def _assert_single_pass(q) -> None:
+    """Each input row reached the stateful dedup exactly once: kept
+    (updated) or dropped as a duplicate, never re-run by a second sink."""
+    for p in q.recentProgress:
+        (dedup,) = p.stateOperators
+        passes = dedup.numRowsUpdated + dedup.customMetrics["numDroppedDuplicateRows"]
+        assert passes == p.numInputRows, (p.batchId, passes, p.numInputRows)
+
+
 def test_dedup_and_dual_sink(spark, stream_dirs):
     d = stream_dirs
     bars = [
@@ -59,6 +69,7 @@ def test_dedup_and_dual_sink(spark, stream_dirs):
         dedup_stream(stream), d["raw"], d["processed"], d["ckpt"]
     )
     q.awaitTermination(120)
+    _assert_single_pass(q)
     raw = spark.read.parquet(d["raw"])
     proc = spark.read.parquet(d["processed"])
     assert raw.count() == 3  # duplicate collapsed
@@ -73,17 +84,70 @@ def test_dedup_and_dual_sink(spark, stream_dirs):
 
 def test_checkpoint_restart_no_reprocess(spark, stream_dirs):
     d = stream_dirs
-    _write_file(d["src"], "b0.json", [_bar("2024-01-02 09:30:00", "AAPL", 100.0)])
-    stream = replay_json_stream(spark, d["src"])
-    q = start_dual_sink(dedup_stream(stream), d["raw"], d["processed"], d["ckpt"])
-    q.awaitTermination(120)
-    # restart with one NEW file; checkpoint must skip the old one (T4/T5)
-    _write_file(d["src"], "b1.json", [_bar("2024-01-02 09:35:00", "AAPL", 101.0)])
-    stream2 = replay_json_stream(spark, d["src"])
-    q2 = start_dual_sink(dedup_stream(stream2), d["raw"], d["processed"], d["ckpt"])
-    q2.awaitTermination(120)
+    progress = []
+    for i, minute in enumerate((30, 35, 40)):
+        # each restart sees one NEW file; the checkpoint must skip the
+        # old ones (T4/T5)
+        bar = _bar(f"2024-01-02 09:{minute}:00", "AAPL", 100.0 + i)
+        _write_file(d["src"], f"b{i}.json", [bar])
+        stream = replay_json_stream(spark, d["src"])
+        q = start_dual_sink(dedup_stream(stream), d["raw"], d["processed"], d["ckpt"])
+        q.awaitTermination(120)
+        _assert_single_pass(q)
+        progress += q.recentProgress
     raw = spark.read.parquet(d["raw"])
-    assert raw.count() == 2  # 1 + 1, no reprocessing of b0
+    assert raw.count() == 3  # 1 + 1 + 1, no reprocessing
+    # every run ends with a no-data batch (the watermark advanced); it
+    # must not append to either table. Files are grouped by the write
+    # job id in their names, because a write always keeps task 0's file,
+    # empty or not.
+    data_batches = sum(p.numInputRows > 0 for p in progress)
+    assert data_batches == 3 and len(progress) > data_batches
+    for table in (d["raw"], d["processed"]):
+        files = list(Path(table).glob("part-*.parquet"))
+        assert len({f.name.split("-", 2)[2][:36] for f in files}) == data_batches
+        assert sum(pq.read_metadata(f).num_rows > 0 for f in files) == data_batches
+
+
+def test_malformed_bus_lines_are_dropped(spark, stream_dirs):
+    """A garbage bus line parses to an all-NULL row; the loader must
+    store neither it nor a NULL-key row in raw or processed."""
+    d = stream_dirs
+    bars = [
+        _bar("2024-01-02 09:30:00", "AAPL", 100.0),
+        _bar("2024-01-02 09:35:00", "AAPL", 101.0),
+    ]
+    Path(d["src"], "b0.json").write_text(
+        "\n".join([json.dumps(bars[0]), "{not json", json.dumps(bars[1])])
+    )
+    q = start_dual_sink(
+        dedup_stream(replay_json_stream(spark, d["src"])),
+        d["raw"], d["processed"], d["ckpt"],
+    )
+    q.awaitTermination(120)
+    for table in (d["raw"], d["processed"]):
+        rows = spark.read.parquet(table).collect()
+        assert len(rows) == 2
+        assert all(r.symbol == "AAPL" and r.timestamp is not None for r in rows)
+
+
+def test_dual_sink_write_failure(spark, stream_dirs):
+    """A sink path that is a regular file fails the query, and the
+    persisted micro-batch is released."""
+    from pyspark.errors import StreamingQueryException
+
+    d = stream_dirs
+    _write_file(d["src"], "b0.json", [_bar("2024-01-02 09:30:00", "AAPL", 100.0)])
+    Path(d["raw"]).write_text("not a directory")
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    q = start_dual_sink(
+        dedup_stream(replay_json_stream(spark, d["src"])),
+        d["raw"], d["processed"], d["ckpt"],
+    )
+    with pytest.raises(StreamingQueryException, match="not a directory"):
+        q.awaitTermination(120)
+    assert q.exception() is not None
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persisted
 
 
 def test_stream_resample_equals_batch(spark, stream_dirs):
