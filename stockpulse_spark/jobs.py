@@ -31,6 +31,7 @@ from stockpulse_spark.functions.indicators import (
     vwap,
 )
 from stockpulse_spark.operators.quality import clean_bars
+from stockpulse_spark.schemas import BARS_RAW
 from stockpulse_spark.sources.rest_replay import incremental_gate, parse_api_payload
 from stockpulse_spark.sources.sinks import write_bronze, write_silver
 from stockpulse_spark.streaming.pipeline import _concurrently, encode_stream_messages
@@ -97,24 +98,29 @@ def analytics_job(
     """Dashboard data load + indicator computation (reference
     app/dashboard.py:29-145) as one lazy plan: partition-pruned scan,
     optional trailing time-range, full indicator panel. The caller
-    renders; nothing is collected here."""
-    df = spark.read.parquet(silver_path)
+    renders; nothing is collected here. Returns the BARS_RAW columns
+    plus the seven indicators.
+
+    The scan reads with the canonical BARS_RAW schema, the panel's
+    input columns (the reference's projected load), so no Spark job
+    runs to infer a schema from parquet footers. The `days` cut keeps
+    each symbol's own last `days` days: it compares each bar with
+    `max(timestamp)` over its symbol, a window that shares the
+    indicator windows' exchange on `symbol`. A view is one shuffle
+    stage plus one result stage."""
+    cols = BARS_RAW.fieldNames()
+    df = spark.read.schema(BARS_RAW).parquet(silver_path)
     if symbol is not None:
         df = df.filter(F.col("symbol") == symbol)  # partition pruning
     if days is not None:
-        mx = df.agg(F.max("timestamp").alias("__mx"))
-        df = (
-            df.crossJoin(F.broadcast(mx))
-            .filter(
-                F.col("timestamp")
-                >= F.col("__mx") - F.make_interval(days=F.lit(days))
-            )
-            .drop("__mx")
+        mx = F.max("timestamp").over(Window.partitionBy("symbol"))
+        df = df.select(*cols, mx.alias("__mx")).filter(
+            F.col("timestamp") >= F.col("__mx") - F.make_interval(days=F.lit(days))
         )
     ctx = IndicatorContext(("symbol",), ("timestamp",), "close")
     mid, up, lo = bollinger(ctx, 20)
     return df.select(
-        "*",
+        *cols,
         sma(ctx, 5).alias("sma5"),
         mid.alias("bb_mid"),
         up.alias("bb_upper"),

@@ -345,12 +345,6 @@ def extract_png_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Testdata shim: treat utf-8 text bytes as the opaque media
-    payload (real pipelines read the binary column from parquet)."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
-
-
 def attach_image_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

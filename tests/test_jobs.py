@@ -8,6 +8,14 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from stockpulse_spark.functions.indicators import (
+    IndicatorContext,
+    atr,
+    bollinger,
+    rsi,
+    sma,
+    vwap,
+)
 from stockpulse_spark.jobs import analytics_job, ingest_job
 
 
@@ -51,6 +59,10 @@ def test_ingest_to_analytics(spark, tmp_path):
     )
 
     panel = analytics_job(spark, silver, symbol="AAPL", days=30)
+    assert panel.columns == [
+        "timestamp", "symbol", "open", "high", "low", "close", "volume",
+        "sma5", "bb_mid", "bb_upper", "bb_lower", "rsi14", "atr14", "vwap",
+    ]
     rows = panel.orderBy("timestamp").collect()
     assert len(rows) == len(bars)
     assert all(r["symbol"] == "AAPL" for r in rows)
@@ -59,6 +71,76 @@ def test_ingest_to_analytics(spark, tmp_path):
     # vwap stays within [min, max] close
     closes = [r["close"] for r in rows]
     assert min(closes) <= rows[-1]["vwap"] <= max(closes)
+
+    # a view is one shuffle stage plus one result stage
+    sc = spark.sparkContext
+    sc.setJobGroup("analytics-view", "analytics-view")
+    try:
+        analytics_job(spark, silver, symbol="AAPL", days=1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("analytics-view")) <= 2
+
+    # same rows as the panel as first written: an inferred-schema scan,
+    # and the days cut as a broadcast cross-join with the scanned max
+    ctx = IndicatorContext(("symbol",), ("timestamp",), "close")
+    mid, up, lo = bollinger(ctx, 20)
+    indicators = [
+        sma(ctx, 5).alias("sma5"),
+        mid.alias("bb_mid"),
+        up.alias("bb_upper"),
+        lo.alias("bb_lower"),
+        rsi(ctx, 14).alias("rsi14"),
+        atr(ctx, 14).alias("atr14"),
+        vwap(ctx).alias("vwap"),
+    ]
+    for days in (1, 30):
+        ref = spark.read.parquet(silver).filter(F.col("symbol") == "AAPL")
+        mx = ref.agg(F.max("timestamp").alias("__mx"))
+        ref = (
+            ref.crossJoin(F.broadcast(mx))
+            .filter(F.col("timestamp") >= F.col("__mx") - F.make_interval(days=F.lit(days)))
+            .drop("__mx")
+            .select("*", *indicators)
+        )
+        got = analytics_job(spark, silver, symbol="AAPL", days=days)
+        assert sorted(got.collect()) == sorted(ref.select(*panel.columns).collect())
+    # the 1-day cut keeps day 3 and day 2's last bar, 09:55
+    assert len(analytics_job(spark, silver, symbol="AAPL", days=1).collect()) == 7
+
+
+def test_analytics_days_cut_is_per_symbol(spark, tmp_path):
+    """With no symbol filter, each symbol keeps its own last `days`
+    days: a symbol whose feed stopped three days before another's
+    stays in the panel."""
+    rows = [
+        (f"2024-01-{d:02d} 10:00:00", sym, 100.0 + d)
+        for sym, last in (("AAPL", 10), ("MSFT", 7))
+        for d in range(last - 4, last + 1)
+    ]
+    path = str(tmp_path / "bars")
+    (
+        spark.createDataFrame(rows, "timestamp string, symbol string, close double")
+        .select(
+            F.to_timestamp("timestamp").alias("timestamp"),
+            "symbol",
+            *(F.col("close").alias(c) for c in ("open", "high", "low", "close")),
+            F.lit(1000).cast("long").alias("volume"),
+        )
+        .write.partitionBy("symbol")
+        .parquet(path)
+    )
+    got = {
+        (r["symbol"], str(r["timestamp"]))
+        for r in analytics_job(spark, path, days=1).collect()
+    }
+    # a 1-day cut keeps bars at or after max - 1 day: the last two
+    assert got == {
+        ("AAPL", "2024-01-09 10:00:00"),
+        ("AAPL", "2024-01-10 10:00:00"),
+        ("MSFT", "2024-01-06 10:00:00"),
+        ("MSFT", "2024-01-07 10:00:00"),
+    }
 
 
 def test_ingest_gate_skips_stale(spark, tmp_path):

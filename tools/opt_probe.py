@@ -1,12 +1,13 @@
 """Optimization-round probe (guide §1): for each headline query,
-capture `.explain("formatted")` to plans/r11/<name>_<tag>.txt and
+capture `.explain("formatted")` to <out>/<name>_<tag>.txt and
 optionally time the computation with the noop sink (§1.4) next to the
 bench's collect() action, so compute cost and driver-transfer cost are
 attributable separately.
 
 Usage:
-    python tools/opt_probe.py --tag=before [--time] [query ...]
+    python tools/opt_probe.py --tag=before [--out=DIR] [--time] [query ...]
 
+--out defaults to the current directory (e.g. --out=plans/r13).
 With no query args, runs the whole headline set. Timing does 1 untimed
 warmup then N=5 runs of each action and reports the min.
 """
@@ -24,8 +25,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from stockpulse_spark.plans import REGISTRY  # noqa: E402
 from stockpulse_spark.session import get_spark  # noqa: E402
-
-PLANS_DIR = Path(__file__).resolve().parent.parent / "plans" / "r12"
 
 
 def capture_plan(df) -> str:
@@ -48,11 +47,14 @@ def time_action(fn, n_runs: int = 5) -> float:
 
 def main() -> None:
     tag = "before"
+    out_dir = Path(".")
     do_time = False
     names: list[str] = []
     for a in sys.argv[1:]:
         if a.startswith("--tag="):
             tag = a.split("=", 1)[1]
+        elif a.startswith("--out="):
+            out_dir = Path(a.split("=", 1)[1])
         elif a == "--time":
             do_time = True
         else:
@@ -62,12 +64,12 @@ def main() -> None:
         names = [n for n, s in REGISTRY.items() if s.headline]
     spark = get_spark("opt_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    PLANS_DIR.mkdir(parents=True, exist_ok=True)
+    out_dir.mkdir(parents=True, exist_ok=True)
     out = {}
     for name in names:
         df = REGISTRY[name].builder(spark, sf_dir)
         plan = capture_plan(df)
-        (PLANS_DIR / f"{name}_{tag}.txt").write_text(plan)
+        (out_dir / f"{name}_{tag}.txt").write_text(plan)
         row = {"exchanges": plan.count("Exchange"), "plan_file": f"{name}_{tag}.txt"}
         if do_time:
             spark.sparkContext.setJobDescription(f"{name}: noop")
